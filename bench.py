@@ -22,43 +22,24 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from legendary_data_pipeline_spark.queries import (  # noqa: E402
-    REGISTRY,
-    SHADOW_REGISTRY,
-)
+from legendary_data_pipeline_spark.queries import GATE, SPECS  # noqa: E402
 from legendary_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
-# Round-over-round comparability across driver-gate rotations: the full
-# total changes composition every time the gate rotates, so the artifact
-# carries two FROZEN pinned baskets (frozen composition is what makes a
-# series comparable — adding names each round would change what the
-# subtotal measures):
-#   PINNED_R1: queries timed in EVERY round since the r1 anchor — the
-#     long-horizon "vs baseline" series (min-of-3).
+# Two FROZEN pinned baskets keep a comparable series across gate
+# rotations (the full total changes composition whenever the gate does;
+# adding names to a basket would change what its subtotal measures):
+#   PINNED_R1: queries timed in every round since the r1 anchor — the
+#     long-horizon "vs baseline" series, always min-of-3.
 #   PINNED_LEGACY: every query demoted from the gate through round 12,
-#     consolidated (r12 verdict #3 — replaces the per-round pinned_r6..
-#     r11 series, whose per-query numbers live in the BENCH_DETAIL
-#     history). Single-run drift tripwire: one run per query, subtotal
-#     only — single-run noise averages out over the 77-query SUM, and
-#     any unchanged-code regression big enough to matter moves it.
-#     FROZEN at the r12 state: queries demoted in r13+ already have a
-#     green driver row from their gate round plus their BENCH_DETAIL
-#     history; growing this basket would both break its comparability
-#     and grow the bench without bound (the r12 verdict's complaint).
-#
-#     FLAG-DISPOSITION RULE (r13 verdict #2, standing): a per-query
-#     legacy number >2x its historical minimum is NOT actionable by
-#     itself — cold single runs on a loaded box read 2-8x over minimum
-#     for sub-second queries whose cost is plan/JIT warmup (the
-#     driver's r13 window flagged 31 names; the builder's same-code
-#     window ≤4). A flag becomes actionable ONLY after a warm min-of-2
-#     retime on unchanged code confirms >2x — and the disposition
-#     recorded in NOTES must state the retime AND the query's
-#     historical BAND across rounds (w5_price_deciles has oscillated
-#     0.32-1.49 s since r2 on untouched code; a one-off retime proves
-#     nothing a band doesn't). The SUBTOTAL is the intended signal;
-#     per-query legacy numbers exist for localizing a subtotal move.
+#     frozen at that state. A single-run drift tripwire: one run per
+#     query, subtotal only; its noise averages out over the 77-query sum.
+#     A per-query legacy number >2x its historical minimum is NOT
+#     actionable by itself (cold single runs of sub-second queries read
+#     2-8x over minimum on a loaded box). It becomes actionable only
+#     after a warm min-of-2 retime on unchanged code confirms >2x, and
+#     the disposition in NOTES.md states the retime and the query's
+#     historical band across rounds.
 PINNED_R1 = [
     "a1_approx_scale_variant", "a1_percentile_rollup_180d",
     "corpus_curation_pipeline", "dedup_exact_sha",
@@ -120,17 +101,14 @@ PINNED_LEGACY = [
 
 
 def _layout_fingerprint(sf_dir: str) -> dict:
-    """Parquet layout fingerprint of the benched sf dir (r13 verdict #3).
+    """Parquet layout fingerprint of the benched sf dir.
 
-    w5/f8-class queries have oscillated 2-4x across rounds on untouched
-    code because the driver REGENERATES the testdata each round and the
-    parquet layout (file/row-group split) shifts scan parallelism. The
-    fingerprint — per table: n_files, n_row_groups, n_rows — rides the
-    bench artifact so any two BENCH records can be compared
-    like-for-like: identical layout_sha = identical physical layout,
-    and a timing shift on unchanged code with a CHANGED sha is
-    dispositioned as layout drift, not engine drift. Full per-table
-    map in BENCH_DETAIL.json; the stdout line carries only the sha.
+    Regenerated testdata can split files/row groups differently, which
+    shifts scan parallelism on unchanged code. The fingerprint — per
+    table: n_files, n_row_groups, n_rows — lets two BENCH records be
+    compared like-for-like: a timing shift with a CHANGED sha is layout
+    drift, not engine drift. Full per-table map in BENCH_DETAIL.json;
+    the stdout line carries only the sha.
     """
     import glob
 
@@ -167,22 +145,18 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     only = os.environ.get("LDP_BENCH_QUERIES")
-    # The gate rotates every round, but the pinned comparison series must
-    # keep timing the SAME queries forever — so the default bench set is
-    # the current gate PLUS any pinned names the rotation has since
-    # demoted to the shadow registry (their specs are unchanged there).
-    specs = {**SHADOW_REGISTRY, **REGISTRY}
+    # Default bench set: the current gate plus both pinned baskets.
     if only:
         names = sorted(only.split(","))
     else:
         names = sorted(
-            set(REGISTRY) | set(PINNED_R1) | set(PINNED_LEGACY)
+            set(GATE) | set(PINNED_R1) | set(PINNED_LEGACY)
         )
-    unknown = [n for n in names if n not in specs]
+    unknown = [n for n in names if n not in SPECS]
     if unknown:
         sys.exit(
             f"unknown query names in LDP_BENCH_QUERIES: {unknown}; "
-            f"available: {sorted(specs)}"
+            f"available: {sorted(SPECS)}"
         )
 
     spark = get_spark(
@@ -190,31 +164,17 @@ def main() -> None:
         master=f"local[{cpus}]",
         extra_conf={
             "spark.ui.enabled": "false",
-            # The final JSON line must be the ONLY stdout the driver's
-            # tail capture has to hold (r8: progress noise + a 2.9 KB
-            # line overflowed it and BENCH_r08 recorded parsed: null).
+            # The final JSON line must be the only stdout: the driver
+            # keeps just the last 2000 chars.
             "spark.ui.showConsoleProgress": "false",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # Round-11 (r10 verdict #3): the DAGScheduler stack-trace fragment in
-    # BENCH_r10's tail was root-caused by rerunning the bench with split
-    # stream capture — ONE straggler task completing after its job's
-    # SQL-metric accumulators were unregistered logged 94 "Failed to
-    # update accumulator ... non-existent accumulator" ERROR traces in a
-    # single burst (the min-of-N rerun + clearCache releases the prior
-    # run's plan, ContextCleaner unregisters its accumulators, then the
-    # late task-completion event reports into the void). The job had
-    # already SUCCEEDED — the race is benign — but 90+ traces can eat
-    # the driver's 2 KB tail capture.
-    # Round-12 (r11 advice): pinning the whole logger to FATAL also
-    # silenced every REAL DAGScheduler ERROR (stage-abort reasons,
-    # task-failure context) — a failed bench still returned rc != 0 but
-    # with its best diagnostics gone. Replaced with a message-targeted
-    # StringMatchFilter: DENY only the benign accumulator-race line,
-    # NEUTRAL for everything else (verified live: the accumulator
-    # message is dropped while a different ERROR on the same logger
-    # still prints).
+    # A straggler task finishing after its job's SQL-metric accumulators
+    # were unregistered logs a benign "Failed to update accumulator"
+    # ERROR trace, sometimes 90+ in a burst — enough to push the JSON
+    # line out of the driver's tail capture. DENY only that message;
+    # every other DAGScheduler ERROR still prints.
     _jvm = spark.sparkContext._jvm
     _name = "org.apache.spark.scheduler.DAGScheduler"
     # setLevel first so a DEDICATED LoggerConfig exists for the name —
@@ -272,61 +232,31 @@ def main() -> None:
     ).write.format("noop").mode("overwrite").save()
 
     def run_once(name: str) -> float:
-        spec = specs[name]
+        spec = SPECS[name]
         start = time.perf_counter()
         df = spec.spark_fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - start
 
-    # Universal min-of-2 (round-8 bench hygiene): this box is a shared
-    # VM and single runs see 2-5x co-tenant noise spikes (NOTES.md), so
-    # every query is timed twice and the min recorded — the min over two
-    # runs measures the engine, not the neighbor. Heavy queries get a
-    # third run, since multi-second timings are exactly where one spike
-    # distorts the round-over-round comparison most. Caches are cleared
-    # between runs so the rerun is data-cold (several dedup queries
-    # .cache() intermediates; without this the second run would time a
-    # cache hit, not the pipeline) — and after each query so cached
-    # blocks never accumulate across the bench.
-    # Round-12 (r11 verdict #5): the PINNED_R1 anchor series is ALWAYS
-    # min-of-3 — the official pinned_r1 swung 21.5→23.4 s on an
-    # unchanged-code cohort purely from box variance, and that series is
-    # the long-horizon vs-baseline trend, so it gets the extra rep (the
-    # 28 queries cost ~23 s total; one more rep is affordable).
-    # METHODOLOGY ISOLATION (r12 code review): the extra anchor rep
-    # feeds ONLY the pinned_r1 subtotal. The headline total and the
-    # pinned_r6..rN series (all supersets of R1) keep the historical
-    # min-of-2 (+ third rep only when heavy) per-query values —
-    # otherwise min-of-3 on the 28 shared queries would bias every
-    # other series downward vs all prior-round BENCH records and read
-    # as a speedup on unchanged code.
+    # Reps: gate queries are timed min-of-2 (single runs see 2-5x
+    # co-tenant spikes), plus a third run when heavy. PINNED_R1 anchors
+    # always get the third run, but that extra rep feeds ONLY the
+    # pinned_r1 subtotal; the headline keeps min-of-2 (+ third when
+    # heavy) so it stays comparable with earlier records. Caches are
+    # cleared between runs so every rerun is data-cold.
     THIRD_RUN_THRESHOLD_SEC = 2.5
     timings: dict[str, float] = {}
     anchor_timings: dict[str, float] = {}
     pinned_anchor = set(PINNED_R1)
-    # Round-13 (r12 verdict #3): the timed set is capped — gate +
-    # PINNED_R1 + the frozen PINNED_LEGACY basket. Legacy-only names
-    # (not in the current gate, not in the anchor) get a SINGLE run:
-    # they feed only the pinned_legacy drift-tripwire subtotal, where
-    # single-run noise averages out over the 77-query sum. Gate and
-    # anchor names keep the historical min-of-2 (+ third rep when heavy
-    # or anchor) so their series stay comparable to prior rounds.
-    gate = set(REGISTRY)
-    # The FIRST timed query historically absorbs residual JVM/JIT
-    # warmup the generic warmups above miss (a1 read 2.1 s leading the
-    # r12 full run, 0.95 s warm; r2 saw the same first-slot pattern) —
-    # one untimed run levels the field. The warm-up query is a FIXED
-    # anchor, not names[0] (r13 advice #4): names is sorted, so which
-    # name leads shifts with registry composition, and when a
-    # legacy-only name led, its later "first (cold) run" tripwire value
-    # was actually a second, warm execution.
-    # Ad-hoc LDP_BENCH_QUERIES runs warm with the FIRST REQUESTED name
-    # instead (r14 advice #4): the fixed anchor is for full runs, where
-    # it is timed anyway; on a one-query ad-hoc run it was an
-    # unrequested extra query execution.
+    # Legacy-only names (not in the gate, not anchors) get a single run.
+    gate = set(GATE)
+    # One untimed run absorbs the residual JVM/JIT warmup the first timed
+    # query would otherwise pay. Full runs warm a FIXED anchor (names is
+    # sorted, so names[0] shifts with registry composition); ad-hoc
+    # LDP_BENCH_QUERIES runs warm the first requested name instead.
     if names:
         warm_name = "a1_percentile_rollup_180d"
-        if only or warm_name not in specs:  # ad-hoc, or renamed/removed
+        if only or warm_name not in SPECS:  # ad-hoc, or renamed/removed
             warm_name = names[0]
         run_once(warm_name)
         spark.catalog.clearCache()
@@ -335,16 +265,10 @@ def main() -> None:
     for name in names:
         t = run_once(name)
         spark.catalog.clearCache()
-        # The legacy subtotal always uses the FIRST (cold) run — even
-        # for basket members currently in the gate (23 of 77 at the
-        # r13 rotation), whose headline timing is min-of-N. Mixing rep
-        # counts inside the frozen basket would make the subtotal
-        # drift upward on unchanged code whenever a member leaves the
-        # gate and its contribution flipped from min-of-2 to
-        # single-run; first-run-always keeps the series methodology-
-        # constant at zero extra runs. Ad-hoc LDP_BENCH_QUERIES runs
-        # skip the collection entirely (r13 advice #2): a partial
-        # basket subtotal labeled reps:1 reads as series drift.
+        # The legacy subtotal always uses the FIRST (cold) run, even for
+        # basket members in the gate, so the frozen basket's rep count
+        # never depends on gate membership. Ad-hoc runs emit no partial
+        # pinned subtotals (a partial sum would read as series drift).
         if name in legacy and not only:
             legacy_timings[name] = round(t, 3)
         if not only and name not in gate and name not in pinned_anchor:
@@ -359,19 +283,12 @@ def main() -> None:
         heavy = t > THIRD_RUN_THRESHOLD_SEC
         t_hist = min(t, third) if (third is not None and heavy) else t
         timings[name] = round(t_hist, 3)
-        # Same rule as the legacy block above: ad-hoc runs emit no
-        # partial pinned_r1 subtotal either (an anchor subset's sum
-        # would read as anchor-series drift; pinned_r1.n discloses the
-        # shortfall, but the legacy lesson is that n fields get
-        # overlooked).
         if name in pinned_anchor and not only:
             t_anchor = min(t, third) if third is not None else t
             anchor_timings[name] = round(t_anchor, 3)
 
-    # Headline total = current gate + the PINNED_R1 anchor basket (the
-    # two min-of-N series); the single-run legacy numbers are kept OUT
-    # of it so the headline stays flat-sized and rep-consistent. An
-    # explicit LDP_BENCH_QUERIES selection is an ad-hoc run: every
+    # Headline total = gate + PINNED_R1 anchors (the min-of-N series);
+    # single-run legacy numbers stay out of it. In an ad-hoc run every
     # requested name gets full reps and counts toward the headline.
     headline = [
         n for n in timings
@@ -379,39 +296,20 @@ def main() -> None:
     ]
     total = round(sum(timings[n] for n in headline), 3)
 
-    # Driver-capture hygiene (r8 lesson: BENCH_r08.json parsed: null —
-    # the single JSON line outgrew the driver's 2000-char tail capture,
-    # cutting the line's HEAD, so the whole line must fit):
-    #   - compact separators, 3-digit timings
-    #   - the stdout line's per-query map holds the CURRENT GATE only
-    #     (~50 names ≈ 1.8 KB total line; the pinned/legacy names are
-    #     timed for their subtotals but their individual numbers live
-    #     in BENCH_DETAIL.json, which carries the FULL map)
-    # The "method" field is the machine-readable methodology marker
-    # (r12 advice #3): segment historical BENCH series on it instead of
-    # reading commit comments. Kept to a short version tag so the
-    # stdout line stays inside the driver's 2000-char tail capture.
-    # Legend: "r14" = r13 semantics PLUS: n_timed counts only the
-    # headline names (value/n_timed coherent; all-in count in
-    # BENCH_DETAIL n_timed_all), fixed-anchor warm-up slot, layout
-    # fingerprint sha in "layout". "r13" = headline total is
-    # gate+anchor only; frozen pinned_legacy basket timed single-run
-    # (subtotal only); r12's untimed first-query warm-up and anchor
-    # min-of-3 isolation retained — r13 records report n_timed = ALL
-    # timed names (131) against the gate+anchor value. Records without
-    # the field are the pre-r13 methodology (headline = sum of ALL
-    # timed queries; per-round pinned_r6..r11 blocks; r1-r11 warm-up
-    # history per BENCH file comments). The headline `value` series
-    # is composition-comparable across r13/r14 (same gate+anchor sum).
+    # The stdout line must fit the driver's 2000-char tail capture
+    # whole (a cut line loses its head and will not parse): compact
+    # separators, 3-digit timings, and a per-query map of the gate only;
+    # BENCH_DETAIL.json carries the full map.
+    # "method" is the methodology marker to segment BENCH series on:
+    #   "r14": headline = gate + anchor sum; n_timed counts only those
+    #     names (all-in count is n_timed_all in BENCH_DETAIL); fixed-
+    #     anchor warm-up slot; layout sha in "layout".
+    #   "r13": same headline, but n_timed counted ALL timed names.
+    #   absent: pre-r13 (headline = sum of ALL timed queries).
     layout = _layout_fingerprint(sf_dir)
     layout_sha = hashlib.sha256(
         json.dumps(layout, sort_keys=True, separators=(",", ":")).encode()
     ).hexdigest()[:12]
-    # n_timed counts exactly the names the headline `value` sums (gate
-    # + anchor) so value/n_timed stay a coherent pair (r13 advice #1 —
-    # r13 records reported n_timed=131 against a ~78-name value);
-    # legacy-only names are counted inside pinned_legacy.n, and the
-    # detail artifact carries the all-in count as n_timed_all.
     payload = {
         "metric": "total_query_sec",
         "value": total,
@@ -439,16 +337,14 @@ def main() -> None:
         },
         "queries": timings,
     }
-    # full per-table layout map + all-in timed count ride the detail
-    # artifact only; the stdout line carries just the sha (tail-capture
-    # budget)
+    # full layout map + all-in timed count ride the detail artifact only
     detail_payload = dict(payload)
     detail_payload["n_timed_all"] = len(timings)
     detail_payload["layout_tables"] = layout
     detail_line = json.dumps(detail_payload, separators=(",", ":"))
     stdout_payload = dict(payload)
     stdout_payload["queries"] = {
-        n: t for n, t in timings.items() if n in REGISTRY
+        n: t for n, t in timings.items() if n in gate
     }
     # reps live in the detail payload; drop them from stdout to keep
     # the line inside the tail capture.

@@ -26,11 +26,11 @@ def _load_bench():
 
 
 def test_stdout_line_fits_driver_tail_capture():
-    from legendary_data_pipeline_spark.queries import REGISTRY
+    from legendary_data_pipeline_spark.queries import GATE
 
     bench = _load_bench()
     names = sorted(
-        set(REGISTRY) | set(bench.PINNED_R1) | set(bench.PINNED_LEGACY)
+        set(GATE) | set(bench.PINNED_R1) | set(bench.PINNED_LEGACY)
     )
     # worst-case widths: every timing 3 integer digits + 3 decimals
     timings = {n: 999.999 for n in names}
@@ -55,7 +55,7 @@ def test_stdout_line_fits_driver_tail_capture():
         "layout": "0123456789ab",
         "pinned_r1": pinned(bench.PINNED_R1),
         "pinned_legacy": pinned(bench.PINNED_LEGACY),
-        "queries": {n: t for n, t in timings.items() if n in REGISTRY},
+        "queries": {n: t for n, t in timings.items() if n in GATE},
     }
     line = json.dumps(payload, separators=(",", ":"))
     # headroom for a trailing newline and a stray final log line
@@ -67,13 +67,9 @@ def test_stdout_line_fits_driver_tail_capture():
 
 
 def test_pinned_names_resolve_in_some_registry():
-    from legendary_data_pipeline_spark.queries import (
-        REGISTRY,
-        SHADOW_REGISTRY,
-    )
+    from legendary_data_pipeline_spark.queries import SPECS
 
     bench = _load_bench()
-    known = set(REGISTRY) | set(SHADOW_REGISTRY)
     pinned = set(bench.PINNED_R1) | set(bench.PINNED_LEGACY)
-    missing = [n for n in pinned if n not in known]
+    missing = [n for n in pinned if n not in SPECS]
     assert not missing, f"pinned bench names missing from registries: {missing}"

@@ -151,16 +151,9 @@ def test_drift_empty_side_raises(spark):
 
 
 def test_source_vocab_overlap_shapes(spark):
-    # gate-membership-agnostic lookup (the r16 rotation promoted this
-    # name; rotations move names between the two registries freely)
-    from legendary_data_pipeline_spark.queries import (
-        REGISTRY,
-        SHADOW_REGISTRY,
-    )
+    from legendary_data_pipeline_spark.queries import SPECS
 
-    spec = REGISTRY.get("an_source_vocab_overlap") or SHADOW_REGISTRY[
-        "an_source_vocab_overlap"
-    ]
+    spec = SPECS["an_source_vocab_overlap"]
     df = spec.spark_fn(spark, "/root/testdata/sf0.001")
     rows = df.collect()
     assert rows

@@ -16,14 +16,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from legendary_data_pipeline_spark.queries import REGISTRY
+from legendary_data_pipeline_spark.queries import SPECS
 
 QUARTILES = (0.25, 0.5, 0.75)
 
 
 @pytest.fixture(scope="module")
 def frames(spark, sf_dir):
-    approx = REGISTRY["a1_approx_scale_variant"].spark_fn(spark, sf_dir)
+    approx = SPECS["a1_approx_scale_variant"].spark_fn(spark, sf_dir)
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     exact = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.expr(
