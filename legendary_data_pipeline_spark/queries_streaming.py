@@ -10,7 +10,9 @@ queries close that gap — each one EXECUTES a genuine Structured
 Streaming job (Trigger.AvailableNow, multi-micro-batch via
 maxFilesPerTrigger=1, real checkpoint + state store) inside the query
 callable, then returns the maintained table for the driver to hash
-against a plain batch-SQL oracle.
+against a plain batch-SQL oracle. The job runs through
+streaming/drain.py, the availableNow drain every production entry
+point uses.
 
 Determinism contract (what makes a streaming run oracle-pairable):
 
@@ -64,6 +66,7 @@ from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.catalog import load_table
 from legendary_data_pipeline_spark.queries import register
+from legendary_data_pipeline_spark.streaming.drain import drain_once, file_stream
 
 #: Staged events carry the engine's normalized integer-nanos ts
 #: (catalog.normalize_event_ts), not the on-disk TIMESTAMP — the stream
@@ -109,14 +112,6 @@ def _stage_events(spark: SparkSession, sf_dir: str, root: str, copies: int = 1) 
                 st = os.stat(src)
                 os.utime(dst, (st.st_mtime + 100 * c, st.st_mtime + 100 * c))
     return staging
-
-
-def _read_staged_stream(spark: SparkSession, staging: str) -> DataFrame:
-    return (
-        spark.readStream.schema(_STAGED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
 
 
 def _scratch_base() -> str | None:
@@ -220,18 +215,16 @@ def stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         staging = _stage_events(spark, sf_dir, root)
         target, ckpt = f"{root}/out", f"{root}/ckpt"
         rolled = daily_event_rollup_stream(
-            _read_staged_stream(spark, staging),
+            file_stream(spark, staging, _STAGED_SCHEMA, 1),
             watermark=_NEVER_LATE,
             include_approx_users=False,
         )
-        q = (
-            rolled.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(upsert_sink(target, ["day", "event_type"]))
-            .trigger(availableNow=True)
-            .start()
+        drain_once(
+            rolled,
+            ckpt,
+            sink=upsert_sink(target, ["day", "event_type"]),
+            output_mode="update",
         )
-        q.awaitTermination()
     return spark.read.parquet(target).select(
         "day", "event_type", "events", "total_value_cents"
     )
@@ -269,17 +262,10 @@ def stream_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         staging = _stage_events(spark, sf_dir, root, copies=2)
         target, ckpt = f"{root}/out", f"{root}/ckpt"
         deduped = dedup_events_stream(
-            _read_staged_stream(spark, staging), watermark=_NEVER_LATE
+            file_stream(spark, staging, _STAGED_SCHEMA, 1),
+            watermark=_NEVER_LATE,
         )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain_once(deduped, ckpt, path=target)
     cents = F.round(F.col("value").cast("decimal(18,2)") * 100, 0).cast("long")
     return (
         spark.read.parquet(target)
@@ -558,16 +544,6 @@ def _stage_ordered_files(spark: SparkSession, parts, root: str) -> str:
     return staging
 
 
-def _split_days(spark: SparkSession, sf_dir: str):
-    """(events_df, midpoint_day) — the event-time halving every
-    order-sensitive parity stages by. Mirrored in SQL as
-    `(min(d) + max(d) + 1) // 2` over `epoch_us(ts) // 86400000000`."""
-    ev = load_table(spark, sf_dir, "events")
-    d = F.expr("ts DIV 86400000000000")
-    lo, hi = ev.agg(F.min(d), F.max(d)).first()
-    return ev, (int(lo) + int(hi) + 1) // 2
-
-
 _EWMA_K = 8
 _EWMA_LAGS = "\n             ".join(
     f"lag(v, {j}) OVER w AS l{j}," for j in range(1, _EWMA_K)
@@ -635,11 +611,9 @@ def stream_ewma_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         # Pin the per-user daily aggregate: the min/max day probe and
         # the staging write both consume it, and without the persist
-        # each consumer replays the corpus groupBy (r15 optimization —
-        # the old shape recomputed `daily` once per take(1)/write pair,
-        # 4 corpus aggregations + the _split_days scan; now ONE corpus
+        # each consumer replays the corpus groupBy: ONE corpus
         # aggregation populates the cache and everything downstream is
-        # aggregate-sized). Released in the finally.
+        # aggregate-sized. Released in the finally.
         daily = (
             ev.groupBy(
                 "user_id", F.expr("ts DIV 86400000000000").alias("t")
@@ -654,8 +628,9 @@ def stream_ewma_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
         try:
-            # same midpoint as _split_days: daily's t spans exactly the
-            # event-day range (groupBy preserves the key's min/max)
+            # the event-time halving every order-sensitive parity stages
+            # by, mirrored in SQL as `(min(d) + max(d) + 1) // 2`; daily's
+            # t spans exactly the event-day range
             lo, hi = daily.agg(F.min("t"), F.max("t")).first()
             mid = (int(lo) + int(hi) + 1) // 2
             staging = _stage_ordered_files(
@@ -722,21 +697,13 @@ def stream_attribution_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         staging = _stage_events(spark, sf_dir, root)
         target, ckpt = f"{root}/out", f"{root}/ckpt"
         clicks, purchases = split_clicks_purchases(
-            _read_staged_stream(spark, staging)
+            file_stream(spark, staging, _STAGED_SCHEMA, 1)
         )
         pairs = attribute_purchases(
             clicks, purchases,
             horizon_minutes=_ATTR_HORIZON_MIN, watermark=_NEVER_LATE,
         )
-        q = (
-            pairs.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain_once(pairs, ckpt, path=target)
     return spark.read.parquet(target).select(
         "purchase_event_id", "click_event_id", "user_id", "lag_us"
     )

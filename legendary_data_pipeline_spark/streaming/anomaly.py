@@ -48,6 +48,8 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from legendary_data_pipeline_spark.streaming.drain import drain_once, file_stream
+
 ANOMALY_SCHEMA = (
     "user_id long, t long, v long, ewma double, resid double"
 )
@@ -213,28 +215,18 @@ def run_ewma_anomaly_once(
     `max_files_per_trigger` splits the backlog into multiple
     micro-batches (cross-batch lag-buffer state; the parity queries
     and tests use 1)."""
-    from pyspark.sql import functions as F
-
     from legendary_data_pipeline_spark.streaming.snapshots import (
         with_event_time,
     )
 
-    reader = spark.readStream.schema("user_id long, ts long, t long, v long")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(source_dir)
+    src = file_stream(
+        spark, source_dir, "user_id long, ts long, t long, v long",
+        max_files_per_trigger,
+    )
     timed = with_event_time(src).withWatermark("event_time", watermark)
     scored = ewma_anomaly_stream(
         timed.select("user_id", "event_time", "t", "v"),
         k=k,
         idle_timeout_ms=idle_timeout_ms,
     )
-    (
-        scored.writeStream.format("parquet")
-        .option("path", target)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_once(scored, checkpoint, path=target)

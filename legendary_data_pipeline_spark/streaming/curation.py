@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.operators.curation import pii_counts, scrub_pii
 from legendary_data_pipeline_spark.operators.textstats import quality_score
+from legendary_data_pipeline_spark.streaming.drain import drain_once, file_stream
 from legendary_data_pipeline_spark.streaming.snapshots import upsert_sink
 
 DOCUMENTS_SCHEMA = (
@@ -55,12 +56,16 @@ def curate_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def read_documents_stream(spark: SparkSession, docs_path: str) -> DataFrame:
-    return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_path)
+def _upsert_by_content(target_path: str):
+    """The keyed upsert sink on `text_sha`, min-doc_id winner within a
+    batch (module doc)."""
+    return upsert_sink(
+        target_path, ["text_sha"], order_within_source=[F.col("doc_id").asc()]
     )
+
+
+def read_documents_stream(spark: SparkSession, docs_path: str) -> DataFrame:
+    return file_stream(spark, docs_path, DOCUMENTS_SCHEMA, max_files_per_trigger=1)
 
 
 def run_curation_once(
@@ -69,24 +74,14 @@ def run_curation_once(
     target_path: str,
     checkpoint_path: str,
 ) -> None:
-    """Drain all available document files once (Trigger.AvailableNow),
+    """Drain all available document files once (`drain.drain_once`),
     curate, and MERGE into the target keyed by content hash."""
     stream = read_documents_stream(spark, docs_path)
-    curated = curate_documents(stream)
-    query = (
-        curated.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
-            upsert_sink(
-                target_path,
-                ["text_sha"],
-                order_within_source=[F.col("doc_id").asc()],
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain_once(
+        curate_documents(stream),
+        checkpoint_path,
+        sink=_upsert_by_content(target_path),
     )
-    query.awaitTermination()
 
 
 def dedup_against_corpus_stream(
@@ -141,17 +136,4 @@ def run_incremental_dedup_once(
     idx = spark.read.parquet(corpus_index_path)
     classified = dedup_against_corpus_stream(stream, idx)
     fresh = classified.filter(F.col("dedup_status") == "new")
-    query = (
-        fresh.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
-            upsert_sink(
-                target_path,
-                ["text_sha"],
-                order_within_source=[F.col("doc_id").asc()],
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain_once(fresh, checkpoint_path, sink=_upsert_by_content(target_path))

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from legendary_data_pipeline_spark.operators.profiling import (
     check_constraints,
 )
+from legendary_data_pipeline_spark.streaming.drain import drain_once, file_stream
 
 
 def quality_report_sink(
@@ -80,22 +81,15 @@ def run_quality_monitor_once(
     fail_path: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Drain all available input files once (Trigger.AvailableNow)
+    """Drain all available input files once (`drain.drain_once`)
     through the constraint monitor. `max_files_per_trigger` splits the
     backlog into multiple audited micro-batches (useful in tests and
     for bounding per-batch work on large backfills)."""
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(quality_report_sink(report_path, checks, fail_path))
-        .trigger(availableNow=True)
-        .start()
+    drain_once(
+        file_stream(spark, input_path, input_schema, max_files_per_trigger),
+        checkpoint_path,
+        sink=quality_report_sink(report_path, checks, fail_path),
     )
-    query.awaitTermination()
 
 
 def drift_monitor_sink(
@@ -162,20 +156,11 @@ def run_drift_monitor_once(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Drain all available input files once through the drift monitor."""
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
-            drift_monitor_sink(baseline, col, report_path, chisq_alert)
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain_once(
+        file_stream(spark, input_path, input_schema, max_files_per_trigger),
+        checkpoint_path,
+        sink=drift_monitor_sink(baseline, col, report_path, chisq_alert),
     )
-    query.awaitTermination()
 
 
 def psi_monitor_sink(
@@ -252,19 +237,10 @@ def run_psi_monitor_once(
     scaled_e6: bool = False,
 ) -> None:
     """Drain all available input files once through the PSI monitor."""
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
-            psi_monitor_sink(
-                baseline, col, report_path, psi_alert, scaled_e6=scaled_e6
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain_once(
+        file_stream(spark, input_path, input_schema, max_files_per_trigger),
+        checkpoint_path,
+        sink=psi_monitor_sink(
+            baseline, col, report_path, psi_alert, scaled_e6=scaled_e6
+        ),
     )
-    query.awaitTermination()

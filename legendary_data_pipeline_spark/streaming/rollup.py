@@ -13,7 +13,8 @@ Idempotency: each commit's manifest op records its batch_id
 retry) is detected by scanning the manifests — metadata-scale — and
 skipped, so a crash between publish and checkpoint cannot double-count.
 The guard is scoped to ONE stream lineage: batch ids restart with a
-fresh checkpoint, so point a fresh checkpoint at a fresh table.
+fresh checkpoint, so the entry points refuse (ValueError) a fresh
+checkpoint on a table that already holds this sink's commits.
 
 Cost per batch: O(batch) aggregation + a join against the rollup
 (small by construction) + one rollup-sized write. At 100 TB of raw
@@ -25,7 +26,9 @@ implementation rewrites the whole rollup snapshot per batch).
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+import glob
+import os
+from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,6 +41,51 @@ from legendary_data_pipeline_spark.sources.versioned import (
     versions,
     write_version,
 )
+from legendary_data_pipeline_spark.streaming.drain import drain_once, file_stream
+
+_ROLLUP_OP = "merge_batch_"
+_CMS_OP = "cms_batch_"
+
+
+def _versioned_merge_sink(
+    table: str,
+    op_prefix: str,
+    build: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+):
+    """`foreachBatch` writer: `build` each non-empty batch, `merge` it
+    into the latest snapshot, commit it tagged `<op_prefix><batch_id>`;
+    the replay guard (module doc) skips an id already tagged."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.limit(1).count() == 0:
+            return
+        op_tag = f"{op_prefix}{int(batch_id)}"
+        committed = versions(table)  # [] for a not-yet-created table
+        if any(m.get("op") == op_tag for m in committed):
+            return  # replayed batch — already merged and published
+        merged = build(batch_df)
+        if committed:
+            merged = merge(read_version(batch_df.sparkSession, table), merged)
+        write_version(merged, table, op=op_tag)
+
+    return write_batch
+
+
+def _require_one_lineage(table: str, checkpoint_path: str, op_prefix: str) -> None:
+    """Refuse a new checkpoint on a table this sink already wrote: its
+    batch ids restart at 0, so the replay guard would drop its batches.
+    A checkpoint with a planned batch (a file under `offsets/`) is a
+    restart that passed this check; its replays are real, including a
+    batch published before its commit was written."""
+    if glob.glob(os.path.join(checkpoint_path, "offsets", "*")):
+        return
+    if any(m.get("op", "").startswith(op_prefix) for m in versions(table)):
+        raise ValueError(
+            f"new checkpoint {checkpoint_path!r} on table {table!r}, which "
+            f"holds {op_prefix}<id> commits: batch ids restart at 0 and would "
+            "be skipped as replays; resume the old checkpoint or use a new table"
+        )
 
 
 def rollup_maintenance_sink(
@@ -47,26 +95,12 @@ def rollup_maintenance_sink(
     kinds: Mapping[str, str],
 ):
     """`foreachBatch` writer maintaining a versioned rollup table."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        op_tag = f"merge_batch_{int(batch_id)}"
-        committed = versions(table)  # [] for a not-yet-created table
-        if any(m.get("op") == op_tag for m in committed):
-            return  # replayed batch — already merged and published
-        spark = batch_df.sparkSession
-        batch_agg = aggregate_batch(batch_df, list(keys), list(specs))
-        if committed:
-            existing = read_version(spark, table)
-            merged = merge_rollup(
-                existing, batch_agg, list(keys), dict(kinds)
-            )
-        else:
-            merged = batch_agg
-        write_version(merged, table, op=op_tag)
-
-    return write_batch
+    return _versioned_merge_sink(
+        table,
+        _ROLLUP_OP,
+        lambda batch: aggregate_batch(batch, list(keys), list(specs)),
+        lambda old, new: merge_rollup(old, new, list(keys), dict(kinds)),
+    )
 
 
 def run_rollup_maintenance_once(
@@ -81,21 +115,13 @@ def run_rollup_maintenance_once(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Drain all available input files once through the maintenance
-    sink (Trigger.AvailableNow)."""
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
-            rollup_maintenance_sink(table, keys, specs, kinds)
-        )
-        .trigger(availableNow=True)
-        .start()
+    sink; ValueError for a new checkpoint on a written table."""
+    _require_one_lineage(table, checkpoint_path, _ROLLUP_OP)
+    drain_once(
+        file_stream(spark, input_path, input_schema, max_files_per_trigger),
+        checkpoint_path,
+        sink=rollup_maintenance_sink(table, keys, specs, kinds),
     )
-    query.awaitTermination()
 
 
 def cms_maintenance_sink(
@@ -116,22 +142,9 @@ def cms_maintenance_sink(
         cms_merge,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        op_tag = f"cms_batch_{int(batch_id)}"
-        committed = versions(table)
-        if any(m.get("op") == op_tag for m in committed):
-            return
-        spark = batch_df.sparkSession
-        batch_cells = cms_build(batch_df, key_col, depth, width)
-        if committed:
-            merged = cms_merge(read_version(spark, table), batch_cells)
-        else:
-            merged = batch_cells
-        write_version(merged, table, op=op_tag)
-
-    return write_batch
+    return _versioned_merge_sink(
+        table, _CMS_OP, lambda batch: cms_build(batch, key_col, depth, width), cms_merge
+    )
 
 
 def run_cms_maintenance_once(
@@ -145,16 +158,11 @@ def run_cms_maintenance_once(
     width: int = 1024,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Drain all available input files once through the CMS sink."""
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(cms_maintenance_sink(table, key_col, depth, width))
-        .trigger(availableNow=True)
-        .start()
+    """Drain all available input files once through the CMS sink;
+    ValueError for a new checkpoint on a written table."""
+    _require_one_lineage(table, checkpoint_path, _CMS_OP)
+    drain_once(
+        file_stream(spark, input_path, input_schema, max_files_per_trigger),
+        checkpoint_path,
+        sink=cms_maintenance_sink(table, key_col, depth, width),
     )
-    query.awaitTermination()

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from legendary_data_pipeline_spark.streaming.drain import drain_once
+
 SESSION_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, "
     "n_events long, total_value double"
@@ -221,15 +223,7 @@ def run_sessionize_once(
     sessions = sessionize_stream(
         stream, gap_seconds=gap_seconds, watermark=watermark
     )
-    (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", target_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_once(sessions, checkpoint_path, path=target_path)
 
 
 def sessionize_batch(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:

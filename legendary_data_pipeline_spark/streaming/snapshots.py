@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from legendary_data_pipeline_spark.streaming.drain import drain_once, file_stream
+
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
     "value double, props string"
@@ -36,10 +38,9 @@ def read_events_stream(
     from legendary_data_pipeline_spark.catalog import normalize_event_ts
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return normalize_event_ts(reader.parquet(path))
+    return normalize_event_ts(
+        file_stream(spark, path, EVENTS_SCHEMA, max_files_per_trigger)
+    )
 
 
 def with_event_time(events: DataFrame) -> DataFrame:
@@ -175,19 +176,16 @@ def run_daily_rollup_once(
     checkpoint_path: str,
     watermark: str = "2 days",
 ) -> None:
-    """Process all available events once (Trigger.AvailableNow) and stop.
+    """Drain all available events once (`drain.drain_once`) and stop.
 
     This is the cron-replacement entry point: each invocation drains new
     files, updates the snapshot table idempotently, and exits.
     """
     stream = read_events_stream(spark, events_path)
-    rolled = daily_event_rollup_stream(stream, watermark)
-    query = (
-        rolled.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(upsert_sink(target_path, ["day", "event_type"]))
-        .trigger(availableNow=True)
-        .start()
+    drain_once(
+        daily_event_rollup_stream(stream, watermark),
+        checkpoint_path,
+        sink=upsert_sink(target_path, ["day", "event_type"]),
+        output_mode="update",
     )
-    query.awaitTermination()
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 import shutil
 
 from legendary_data_pipeline_spark.catalog import normalize_event_ts
+from legendary_data_pipeline_spark.streaming.drain import drain_once
 from legendary_data_pipeline_spark.streaming.attribution import (
     attribute_purchases,
     split_clicks_purchases,
@@ -37,15 +38,7 @@ def test_stream_stream_attribution_matches_batch(spark, tmp_path):
     assert attributed.isStreaming
 
     out = str(tmp_path / "attr_out")
-    (
-        attributed.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_once(attributed, str(tmp_path / "ckpt"), path=out)
     got = spark.read.parquet(out)
 
     batch_ev = normalize_event_ts(

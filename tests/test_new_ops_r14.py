@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 # the registry package must initialize before any queries_* submodule
 # is imported directly (rotation-time import-order contract)
 import legendary_data_pipeline_spark.queries  # noqa: F401
-
+from legendary_data_pipeline_spark.streaming.drain import drain_once, file_stream
 from tests.conftest import SF_DIR
 
 
@@ -37,10 +37,9 @@ def test_parity_variant_drops_hll_column(spark):
         daily_event_rollup_stream,
     )
 
-    stream = (
-        spark.readStream.schema("event_id long, ts long, user_id long, "
-                                "event_type string, value double, props string")
-        .parquet(SF_DIR)  # never started — schema-only check
+    stream = file_stream(  # never started — schema-only check
+        spark, SF_DIR, "event_id long, ts long, user_id long, "
+        "event_type string, value double, props string",
     )
     exact = daily_event_rollup_stream(stream, include_approx_users=False)
     assert exact.columns == ["day", "event_type", "events", "total_value_cents"]
@@ -70,22 +69,12 @@ def test_stream_dedup_collapses_cross_batch_redelivery(spark, tmp_path):
             "append"
         ).parquet(inp)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inp)
-    )
     out = str(tmp_path / "out")
-    q = (
-        dedup_events_stream(stream, watermark="3650 days")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_once(
+        dedup_events_stream(file_stream(spark, inp, schema, 1), watermark="3650 days"),
+        str(tmp_path / "ckpt"),
+        path=out,
     )
-    q.awaitTermination()
     got = sorted(
         (r.event_id, r.user_id, r.value)
         for r in spark.read.parquet(out).collect()

@@ -19,6 +19,7 @@ import os
 
 import pytest
 
+from legendary_data_pipeline_spark.streaming.drain import drain_once, file_stream
 from tests.conftest import SF_DIR
 from tests.oracle_utils import compare_to_oracle
 
@@ -161,16 +162,11 @@ def test_file_stream_delivers_in_mtime_order(spark, tmp_path):
     def sink(df, bid):
         batches[int(bid)] = [r.v for r in df.collect()]
 
-    q = (
-        spark.readStream.schema("v long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_once(
+        file_stream(spark, str(src), "v long", 1),
+        str(tmp_path / "ckpt"),
+        sink=sink,
     )
-    q.awaitTermination()
     assert batches == {0: [1], 1: [2]}
 
 

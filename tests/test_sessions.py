@@ -7,6 +7,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.catalog import normalize_event_ts
+from legendary_data_pipeline_spark.streaming.drain import drain_once
 from legendary_data_pipeline_spark.streaming.sessions import (
     sessionize_batch,
     sessionize_stream,
@@ -74,18 +75,8 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
     out_dir = str(tmp_path / "sessions_out")
     ckpt = str(tmp_path / "ckpt")
 
-    def drain():
-        (
-            sessions.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    drain()  # buffers state; watermark reaches max event time
+    # buffers state; watermark reaches max event time
+    drain_once(sessions, ckpt, path=out_dir)
 
     # Sentinel event far past every session's timeout advances the
     # watermark so all real sessions close on the next drain.
@@ -97,7 +88,7 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string,"
         " value double, props string",
     ).write.mode("append").parquet(str(events_dir))
-    drain()
+    drain_once(sessions, ckpt, path=out_dir)
 
     got = {
         (r.user_id, r.session_start, r.session_end): (

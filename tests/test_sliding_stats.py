@@ -7,6 +7,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.catalog import normalize_event_ts
+from legendary_data_pipeline_spark.streaming.drain import drain_once
 from legendary_data_pipeline_spark.streaming.snapshots import (
     read_events_stream,
     sliding_stats_stream,
@@ -26,15 +27,7 @@ def test_sliding_stats_stream_matches_batch(spark, tmp_path):
     assert stats.isStreaming
 
     out = str(tmp_path / "stats")
-    (
-        stats.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_once(stats, str(tmp_path / "ckpt"), path=out)
     got_df = spark.read.parquet(out)
 
     # batch equivalent over the same frame definition; only compare

@@ -7,6 +7,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.catalog import normalize_event_ts
+from legendary_data_pipeline_spark.streaming.drain import drain_once
 from legendary_data_pipeline_spark.streaming.snapshots import (
     daily_event_rollup_stream,
     run_daily_rollup_once,
@@ -109,15 +110,7 @@ def test_streaming_dedup_drops_redelivered(spark, tmp_path):
     deduped = dedup_events_stream(read_events_stream(spark, str(events_dir)))
     assert deduped.isStreaming
     out = str(tmp_path / "out")
-    (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_once(deduped, str(tmp_path / "ckpt"), path=out)
     n_unique = (
         normalize_event_ts(spark.read.parquet(f"{SF_DIR}/events.parquet"))
         .select("event_id")
@@ -149,18 +142,7 @@ def test_dedup_events_within_watermark_drops_redeliveries(spark, tmp_path):
     out = str(tmp_path / "deduped_out")
     ckpt = str(tmp_path / "ckpt_dedup")
 
-    def drain():
-        (
-            deduped.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    drain()
+    drain_once(deduped, ckpt, path=out)
     n_src = normalize_event_ts(
         spark.read.parquet(f"{SF_DIR}/events.parquet")
     ).count()
@@ -173,7 +155,7 @@ def test_dedup_events_within_watermark_drops_redeliveries(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long,"
         " event_type string, value double, props string",
     ).write.mode("append").parquet(str(events_dir))
-    drain()
+    drain_once(deduped, ckpt, path=out)
     assert spark.read.parquet(out).count() == n_src + 1
 
 

@@ -3,6 +3,7 @@ replay idempotency."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.operators.rollup import aggregate_batch
@@ -12,6 +13,7 @@ from legendary_data_pipeline_spark.sources.versioned import (
 )
 from legendary_data_pipeline_spark.streaming.rollup import (
     rollup_maintenance_sink,
+    run_cms_maintenance_once,
     run_rollup_maintenance_once,
 )
 
@@ -100,9 +102,6 @@ def _cells(df):
 
 def test_cms_stream_equals_full_build(spark, tmp_path):
     from legendary_data_pipeline_spark.operators.cms import cms_build
-    from legendary_data_pipeline_spark.streaming.rollup import (
-        run_cms_maintenance_once,
-    )
 
     inp = str(tmp_path / "cin")
     b1 = [(k % 7,) for k in range(300)]
@@ -131,9 +130,6 @@ def test_cms_stream_equals_full_build(spark, tmp_path):
 
 def test_cms_stream_estimates_never_undercount(spark, tmp_path):
     from legendary_data_pipeline_spark.operators.cms import cms_query
-    from legendary_data_pipeline_spark.streaming.rollup import (
-        run_cms_maintenance_once,
-    )
 
     inp = str(tmp_path / "cin2")
     rows = [(k % 5,) for k in range(500)]
@@ -147,3 +143,45 @@ def test_cms_stream_estimates_never_undercount(spark, tmp_path):
     probes = spark.createDataFrame([(i,) for i in range(5)], "k long")
     for r in cms_query(sketch, probes, "k", 3, 32).collect():
         assert r["cms_est"] >= 100
+
+
+# ---------------------------------------------------------------------------
+# one stream lineage per table: batch ids restart with a new checkpoint
+# ---------------------------------------------------------------------------
+
+def _run_lineage(spark, tmp_path, kind, ckpt, rows):
+    inp = str(tmp_path / f"in_{ckpt}")
+    spark.createDataFrame(rows, _SCHEMA).coalesce(1).write.mode("append").parquet(inp)
+    table, ck = str(tmp_path / kind), str(tmp_path / ckpt)
+    if kind == "rollup":
+        run_rollup_maintenance_once(
+            spark, inp, _SCHEMA, table, _KEYS, _specs(), _KINDS, ck
+        )
+    else:
+        run_cms_maintenance_once(
+            spark, inp, _SCHEMA, table, "g", ck, depth=2, width=8
+        )
+    return table
+
+
+@pytest.mark.parametrize("kind", ["rollup", "cms"])
+def test_new_checkpoint_on_written_table_is_refused(spark, tmp_path, kind):
+    table = _run_lineage(spark, tmp_path, kind, "ck1", [("a", 1), ("b", 2)])
+    with pytest.raises(ValueError, match="ck2") as err:
+        _run_lineage(spark, tmp_path, kind, "ck2", [("a", 10), ("c", 5)])
+    assert table in str(err.value)
+    assert len(versions(table)) == 1
+
+
+def test_restart_after_publish_before_commit_replays_once(spark, tmp_path):
+    """A crash between publishing batch 0 and committing it leaves the
+    checkpoint with an offset but no commit. The restart replays batch
+    0, which the replay guard skips, then merges the new file."""
+    table = _run_lineage(spark, tmp_path, "rollup", "ck", [("a", 1), ("b", 2)])
+    for f in (tmp_path / "ck" / "commits").iterdir():
+        f.unlink()
+    _run_lineage(spark, tmp_path, "rollup", "ck", [("a", 10)])
+    assert [m["op"] for m in versions(table)] == ["merge_batch_0", "merge_batch_1"]
+    assert _by_key(read_version(spark, table)) == {
+        "a": (2, 11, 10), "b": (1, 2, 2),
+    }

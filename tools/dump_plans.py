@@ -5,8 +5,9 @@ Usage: python tools/dump_plans.py <suffix> name1 name2 ...
 Writes plans/r15/<name>_<suffix>.txt for each query.
 
 Streaming parity queries are skipped automatically — building their
-returned frame would EXECUTE the availableNow job; their evidence is
-the phase probe (tools/probe_stream_phases.py) instead.
+returned frame would EXECUTE the availableNow job; their phase times
+come from the benchmark's traced run instead (NOTES.md, "Streaming
+phase timing").
 """
 
 from __future__ import annotations
